@@ -115,6 +115,14 @@ def _robots_pairs_expr(body):
             # index, O(lines²) element allocations per body (ADVICE
             # r17: real robots.txt files run to tens of thousands of
             # lines).
+            # Bound: O(lines × groups) per body, not O(lines) — every
+            # directive line rescans the start array. That is fine for
+            # realistic files: their length comes from long rule lists
+            # under a few dozen User-agent groups at most, so the
+            # rescan is a small constant factor. Only adversarial input
+            # where most lines start a group (alternating User-agent /
+            # Disallow) is quadratic; a running prefix sum over the
+            # start flags would make it O(lines) if that ever matters.
             starts = F.filter(
                 F.transform(d, lambda x, i: i),
                 lambda j: F.element_at(u, j + 1)

@@ -81,6 +81,55 @@ def _await_stream(q, timeout: int = 300) -> None:
             "its sink would be partial"
         )
 
+
+def _replay_as_stream(
+    spark: SparkSession,
+    rows: DataFrame,
+    split_col: str,
+    per_batch: Callable[[DataFrame, int], DataFrame],
+    key: list[str],
+) -> DataFrame:
+    """Replay ``rows`` as a four-trigger file stream and return the end
+    state of the replay-idempotent K1 sink the triggers merge into.
+
+    The scaffold every frozen-globals streaming twin shares: the rows
+    land as four single-file parquet appends split on
+    ``split_col % 4``, a one-file-per-trigger reader makes each file
+    one micro-batch, and ``foreachBatch`` inserts
+    ``per_batch(batch_df, batch_id)`` into one ParquetTable where
+    ``key`` is absent. The availableNow run drains through
+    :func:`_await_stream`, so a recipe that raises fails this call
+    instead of leaving a partial sink behind."""
+    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
+
+    src_dir = scratch_dir("replay")
+    n_batches = 4
+    for i in range(n_batches):
+        rows.filter(F.col(split_col) % n_batches == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+    schema = spark.read.parquet(src_dir).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    sink = ParquetTable(spark, _sink_scratch("replay"))
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        insert_if_absent(
+            sink, per_batch(batch_df, batch_id), key, batch_id=batch_id
+        )
+
+    q = (
+        stream.writeStream.foreachBatch(merge)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_stream(q)
+    return sink.read()
+
 # --------------------------------------------------------------------------
 # TPC-H-shaped relational core (scan → filter → join → agg → window)
 # --------------------------------------------------------------------------
@@ -2699,25 +2748,13 @@ def streaming_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality is the correctness argument for running this pipeline
     nightly on a 100 TB corpus instead of re-pairing from scratch."""
 
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
+    from farmrpg_etl_spark.sinks.writers import ParquetTable
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = scratch_dir("ing")
-    n_batches = 4
-    for i in range(n_batches):
-        d.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     index = ParquetTable(spark, scratch_dir("sigidx"))
-    pairs_tbl = ParquetTable(spark, scratch_dir("pairs"))
+    new_indexes: list[DataFrame] = []
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int) -> DataFrame:
         stored = index.read()
         if stored is None:
             stored = dedup.minhash_signatures(
@@ -2728,24 +2765,19 @@ def streaming_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=16, bands=4, threshold=0.3, shingle_k=3,
             indexed_sigs=stored,
         )
-        insert_if_absent(
-            pairs_tbl, delta, ["id_a", "id_b"], batch_id=batch_id, writer="pairs"
-        )
-        # Replay guard, same as the pairs write above: a re-delivered
+        # Replay guard, same as the pairs write: a re-delivered
         # foreachBatch must not append duplicate (id, sig) rows to the
         # index (they would inflate every later batch's join).
         if not index._already_committed(batch_id, "sigs"):
             index._commit(new_index, batch_id, "sigs")
-        new_index.unpersist()
+        # the pairs delta is computed from the persisted new_index, so
+        # it stays cached until the stream has drained
+        new_indexes.append(new_index)
+        return delta
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    out = pairs_tbl.read()
+    out = _replay_as_stream(spark, d, "doc_id", ingest, ["id_a", "id_b"])
+    for new_index in new_indexes:
+        new_index.unpersist()
     return out.select("id_a", "id_b", "jaccard")
 
 
@@ -2764,15 +2796,9 @@ def streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the claim that lets a 100 TB corpus maintain its ANN index
     by delta."""
 
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
+    from farmrpg_etl_spark.sinks.writers import ParquetTable
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src_dir = scratch_dir("pqing")
-    n_batches = 4
-    for i in range(n_batches):
-        e.filter(F.col("vec_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
 
     def unitized(df: DataFrame) -> DataFrame:
         return similarity._unitize(
@@ -2788,32 +2814,14 @@ def streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         batch_id=-1, writer="codebook",
     )
-    index_tbl = ParquetTable(spark, scratch_dir("pqidx"))
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int) -> DataFrame:
         cb = cb_tbl.read()
-        codes = similarity.pq_seed_encode(
+        return similarity.pq_seed_encode(
             unitized(batch_df), cb, "vec_id", dim=64, m=8
         )
-        insert_if_absent(
-            index_tbl, codes, ["vec_id"], batch_id=batch_id, writer="pqidx"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return index_tbl.read().select(
+    return _replay_as_stream(spark, e, "vec_id", ingest, ["vec_id"]).select(
         "vec_id", *[f"c{s}" for s in range(8)]
     )
 
@@ -2926,7 +2934,6 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     same equality argument as streaming_incremental_lsh."""
 
     from farmrpg_etl_spark.operators.dedup import keep_first_per_key
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     base_docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # plant recrawl duplicates (the shipped corpus is content-distinct):
@@ -2940,26 +2947,13 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + F.lit(1_000_001)).alias("doc_id"), "text"
         )
     )
-    src_dir = scratch_dir("cing")
-    n_batches = 4
-    for i in range(n_batches):
-        d.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    corpus = ParquetTable(spark, scratch_dir("corp"))
     digest = F.md5(
         F.regexp_replace(
             F.lower(F.trim(F.col("text"))), r"\s+", " "
         ).cast("binary")
     )
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int) -> DataFrame:
         gated = (
             T.text_metrics(batch_df, "text")
             .filter(F.col("quality") >= 0.5)
@@ -2968,19 +2962,10 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = gated.withColumn("digest", digest).select(
             "digest", "doc_id", "quality"
         )
-        rows = keep_first_per_key(rows, ["digest"], order_col="doc_id")
-        insert_if_absent(
-            corpus, rows, ["digest"], batch_id=batch_id, writer="corpus"
-        )
+        return keep_first_per_key(rows, ["digest"], order_col="doc_id")
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return corpus.read().select("doc_id", "quality")
+    corpus = _replay_as_stream(spark, d, "doc_id", ingest, ["digest"])
+    return corpus.select("doc_id", "quality")
 
 
 def streaming_flags_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6773,41 +6758,20 @@ def streaming_ppl_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-count fallback; the tail bucket is cut before the sink."""
 
     from farmrpg_etl_spark.operators import langmodel as LM
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     lm = LM.train_bigram_lm(
         docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
     ).persist()
-    src_dir = scratch_dir("ppl")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("pplsink"))
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        out = LM.ppl_bucket_filter(
+    def score(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return LM.ppl_bucket_filter(
             batch_df, "text", "doc_id", head_nll=3.40, tail_nll=3.47, lm=lm
         )
-        insert_if_absent(sink, out, ["doc_id"], batch_id=batch_id, writer="ppl")
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    out = _replay_as_stream(spark, docs, "doc_id", score, ["doc_id"])
     lm.unpersist()
-    return sink.read()
+    return out
 
 
 def streaming_kn5_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6826,7 +6790,6 @@ def streaming_kn5_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     half ≈ 1.1, unseen half ≈ 3.7; stable across SFs)."""
 
     from farmrpg_etl_spark.operators import langmodel as LM
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # FROZEN tables (r18, VERDICT #7): the persisted form re-plans the
@@ -6841,38 +6804,16 @@ def streaming_kn5_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", order=5
         )
     )
-    src_dir = scratch_dir("kn5")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("kn5sink"))
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        out = LM.ppl_bucket_filter_kn(
+    def score(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return LM.ppl_bucket_filter_kn(
             batch_df, "text", "doc_id", head_nll=1.50, tail_nll=3.76,
             order=5, tables=tables,
         )
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="kn5ppl"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    out = _replay_as_stream(spark, docs, "doc_id", score, ["doc_id"])
     LM.unpersist_kn_tables(tables)
-    return sink.read()
+    return out
 
 
 def bloom_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7417,7 +7358,6 @@ def streaming_ccnet_per_lang_docs(
     batch against LM-sized relations once on the prefixed keys."""
 
     from farmrpg_etl_spark.operators import langmodel as LM
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     d = load_table(spark, sf_dir, "documents")
     lang_rel = d.select(
@@ -7438,44 +7378,24 @@ def streaming_ccnet_per_lang_docs(
     # silently fork from ccnet_per_lang_filter and surface as a
     # cross-engine mismatch)
     thr = F.broadcast(LM.ccnet_thresholds(nll_full, "lang"))
-    src_dir = scratch_dir("ccnets")
-    n_batches = 4
-    for i in range(n_batches):
-        d.select("doc_id", "text").filter(
-            F.col("doc_id") % n_batches == i
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("ccnetssink"))
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame, batch_id: int) -> DataFrame:
         batch = batch_df.join(F.broadcast(lang_rel), "doc_id")
         nll = LM.doc_nll_kn_ngram(
             batch, "text", "doc_id", order=5, tables=tables,
             key_cols=("lang",),
         )
         # the frozen-threshold cut lives once, in ccnet_per_lang_filter
-        out = LM.ccnet_per_lang_filter(
+        return LM.ccnet_per_lang_filter(
             None, "text", "doc_id", "lang", thresholds=thr, nll=nll
         )
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="ccnets"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out = _replay_as_stream(
+        spark, d.select("doc_id", "text"), "doc_id", score, ["doc_id"]
     )
-    _await_stream(q)
     LM.unpersist_kn_tables(tables)
     lang_rel.unpersist()
-    return sink.read()
+    return out
 
 
 def training_data_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7548,7 +7468,6 @@ def streaming_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         frequent_lines,
         split_lines,
     )
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -7580,38 +7499,15 @@ def streaming_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    src_dir = scratch_dir("v6s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("v6ssink"))
 
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
         denied_b = robots_denied_ids(_v6_urls(batch_df), rules)
-        out = _crawl_corpus_interior(
+        return _crawl_corpus_interior(
             batch_df, denied_b, boiler=boiler, eval_grams=eval_grams,
             persist_pages=False,
         )
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v6stream"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return sink.read()
+    return _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
 
 
 def _v7_interior_scored(
@@ -7775,45 +7671,19 @@ def streaming_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the (lang, ctx) prefixed keys against LM-sized frozen leaves —
     recalibrate per snapshot, stream the crawl through the frozen
     models, CCNet's actual incremental shape."""
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
+    from farmrpg_etl_spark.operators import langmodel as LM
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
     fz = _v7_frozen_globals(spark, docs)
-    rules, boiler, eval_grams = fz["rules"], fz["boiler"], fz["eval_grams"]
-    tables, thr = fz["tables"], fz["thr"]
-    src_dir = scratch_dir("v7s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("v7ssink"))
 
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        out = _v7_frozen_batch(batch_df, fz)
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v7stream"
-        )
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return _v7_frozen_batch(batch_df, fz)
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    from farmrpg_etl_spark.operators import langmodel as LM
-
-    LM.unpersist_kn_tables(tables)
-    return sink.read()
+    out = _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
+    LM.unpersist_kn_tables(fz["tables"])
+    return out
 
 
 def _v7_frozen_globals(spark: SparkSession, docs: DataFrame) -> dict:
@@ -8016,29 +7886,16 @@ def streaming_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the frozen ratio is n_buckets-sized and broadcast; the
     cutoff is ONE scalar (the only collect, bounded by construction);
     per-trigger work is batch-sized."""
+    from farmrpg_etl_spark.operators import langmodel as LM
     from farmrpg_etl_spark.operators.quality import dsir_scored
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
     fz = _v7_frozen_globals(spark, docs)
     _, _, ratio, keep = _v8_frozen_selection(docs, fz)
-    src_dir = scratch_dir("v8s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("v8ssink"))
 
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # batch-sized leaf: the survivor relation feeds both the DSIR
         # feature hash and the metadata join-back — one interior run
         # per trigger, not two
@@ -8049,24 +7906,13 @@ def streaming_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
             surv_b, None, "text_out", "doc_id", n_buckets=4096,
             ratio=ratio,
         ).filter(keep)
-        out = sel.join(
+        return sel.join(
             surv_b.select("doc_id", "lang", "bucket"), "doc_id"
         ).select("doc_id", "lang", "bucket", "logw", "gkey")
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v8stream"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    from farmrpg_etl_spark.operators import langmodel as LM
-
+    out = _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
     LM.unpersist_kn_tables(fz["tables"])
-    return sink.read()
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -8315,38 +8161,13 @@ def streaming_leakage_splits_docs(
     Scale: the frozen label relation is pair-graph-sized (only docs
     in some family appear); per-trigger work is one left join against
     that leaf plus a per-row expression."""
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     clusters = _frozen_doc_clusters(docs).localCheckpoint()
-    src_dir = scratch_dir("splits_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("splitssink"))
 
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        out = dedup.leakage_safe_splits(batch_df, "doc_id", clusters)
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="splitstream"
-        )
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return dedup.leakage_safe_splits(batch_df, "doc_id", clusters)
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return sink.read()
+    return _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
 
 
 # The trained-classifier family's shared pieces: one definition of
@@ -8478,44 +8299,18 @@ def streaming_logit_filter_docs(
     Scale: the frozen weights are ONE row (broadcast by
     construction); per-trigger work is the feature projection plus
     that join — no shuffle, no state, no collect."""
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     _, final = _logit_trained(_logit_labeled(spark, sf_dir, docs=docs))
     # one leaf instead of a K+1-leg filtered union per trigger (r18,
     # VERDICT #7 — the hashed twin already froze its final weights)
     final = final.localCheckpoint()
 
-    src_dir = scratch_dir("logit_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("logitsink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        out = _logit_score(
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return _logit_score(
             _logit_labeled(spark, sf_dir, docs=batch_df), final
         )
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="logitstream"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return sink.read()
+    return _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
 
 
 def _hashed_logit_trained(
@@ -8605,42 +8400,17 @@ def streaming_logit_hashed_filter_docs(
         hashed_logit_features,
         hashed_logit_score,
     )
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     _, final = _hashed_logit_trained(spark, sf_dir)
     final = final.localCheckpoint()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    src_dir = scratch_dir("hlogit_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("hlogitsink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
         feats = hashed_logit_features(batch_df, "text", "doc_id")
         lab = _logit_labeled(spark, sf_dir, docs=batch_df)
-        out = hashed_logit_score(feats, lab, final, "doc_id")
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="hlogitstream"
-        )
+        return hashed_logit_score(feats, lab, final, "doc_id")
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    return sink.read()
+    return _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id"])
 
 
 def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8664,8 +8434,8 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_epochs copies) and broadcast; per-trigger work is the frozen
     v7 recipe on the batch (batch-sized) plus that broadcast join;
     the only collect is the v8 twin's one frozen-cutoff row."""
+    from farmrpg_etl_spark.operators import langmodel as LM
     from farmrpg_etl_spark.operators.quality import dsir_scored
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -8687,45 +8457,19 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schedule = _v9_pack_tail(docs, selected, splits).localCheckpoint()
 
-    src_dir = scratch_dir("v9s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = ParquetTable(spark, _sink_scratch("v9ssink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
+    def proc(batch_df: DataFrame, batch_id: int) -> DataFrame:
         surv_b = _v7_frozen_batch(batch_df, fz, include_text=True)
         sel_b = dsir_scored(
             surv_b, None, "text_out", "doc_id", n_buckets=4096, ratio=ratio
         ).filter(keep).select("doc_id")
-        out = sel_b.join(F.broadcast(schedule), "doc_id").select(
+        return sel_b.join(F.broadcast(schedule), "doc_id").select(
             "doc_id", "source", "copy", "n_tok",
             "start_offset", "first_pack", "last_pack",
         )
-        insert_if_absent(
-            sink, out, ["doc_id", "copy"], batch_id=batch_id,
-            writer="v9stream",
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
-    from farmrpg_etl_spark.operators import langmodel as LM
-
+    out = _replay_as_stream(spark, docs, "doc_id", proc, ["doc_id", "copy"])
     LM.unpersist_kn_tables(fz["tables"])
-    return sink.read()
+    return out
 
 
 # --------------------------------------------------------------------------

@@ -1,136 +1,24 @@
-"""Explicit StructType schemas — the engine's data-model foundation.
+"""Explicit StructType schemas for the multimodal tables.
 
-The reference derives SQL DDL mechanically from ``attrs`` type
-annotations (reference ``src/farmrpg_etl/db/core/models.py:57-85``);
-canonical DDL lives in its alembic migrations
-(``migrations/versions/420ff2a8e514_create_message.py:21-54``,
-``52f2a3e57590_add_user_tables.py:21-50``). We keep the same
-schema-on-write stance: every table/stream has a fixed, explicitly
-declared StructType; nothing is ever inferred.
+Schema-on-write, as in the reference, which derives its SQL DDL from
+``attrs`` annotations (``src/farmrpg_etl/db/core/models.py:57-85``):
+every table has a fixed, declared schema and nothing is inferred. The chat/user/mail record schemas are the DDL strings in
+``farmrpg_etl_spark.parse.stage.SOURCE_FIELDS``; this module holds
+the StructTypes of the binary-media and embedding tables.
 """
 
 from __future__ import annotations
 
-import re
-
-
-def camel_to_snake(name: str) -> str:
-    """Table-naming convention (reference db/core/models.py:21,177
-    derives SQL table names from class names): 'UserSnapshot' →
-    'user_snapshot'. Engine-side convention, not a data op."""
-    return re.sub(r"(?<=[a-z0-9])([A-Z])", r"_\1", name).lower()
-
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    BooleanType,
     FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
-
-# --- landing zone: one row per HTTP poll result -------------------------
-# Models reference scrapers' fetch results (scrapers/chat.py:124-154).
-# `fetch_ts` replaces every in-parser datetime.now() (chat.py:36,91) so
-# parses are deterministic across executors and retries.
-RAW_PAYLOAD = StructType(
-    [
-        StructField("source", StringType(), False),   # chat|flags|mailbox|message|online|staff|profile
-        StructField("key", StringType(), True),       # room / mail id / username
-        StructField("fetch_ts", TimestampType(), False),
-        StructField("status", IntegerType(), False),
-        StructField("body", BinaryType(), False),
-    ]
-)
-
-# --- core chat message (models/chat.py:9-19 + message migration) --------
-MESSAGE = StructType(
-    [
-        StructField("room", StringType(), False),
-        StructField("id", StringType(), False),       # UNIQUE natural key
-        StructField("ts", TimestampType(), False),    # UTC
-        StructField("emblem", StringType(), False),
-        StructField("username", StringType(), False),
-        StructField("content", StringType(), False),
-        StructField("flags", IntegerType(), False),
-        StructField("deleted", BooleanType(), False),
-        StructField("deleted_ts", TimestampType(), True),
-    ]
-)
-
-# flags-log observation; no real message id (scrapers/chat.py:86-115)
-FLAG_EVENT = StructType(
-    [
-        StructField("room", StringType(), False),
-        StructField("synthetic_id", StringType(), False),
-        StructField("ts", TimestampType(), False),
-        StructField("username", StringType(), False),
-        StructField("content", StringType(), False),
-        StructField("flags", IntegerType(), False),
-    ]
-)
-
-# --- user identity + snapshots (models/user.py:11-24) -------------------
-USER = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("firebase_uid", StringType(), True),  # UNIQUE when present
-    ]
-)
-
-USER_SNAPSHOT = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("ts", TimestampType(), False),
-        StructField("username", StringType(), False),
-        StructField("is_farmhand", BooleanType(), False),
-        StructField("is_ranger", BooleanType(), False),
-    ]
-)
-
-# --- mail path (models/mailbox.py:6-11, scrapers/mailbox.py:75-78) ------
-MAIL = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("username", StringType(), False),
-        StructField("ts", TimestampType(), False),
-        StructField("subject", StringType(), False),
-        StructField("content", StringType(), False),
-    ]
-)
-
-MAILBOX_ROW = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("unread", BooleanType(), False),
-    ]
-)
-
-ONLINE_PRESENCE = StructType(
-    [
-        StructField("username", StringType(), False),
-        StructField("sweep_ts", TimestampType(), False),
-        StructField("kind", StringType(), False),  # online | staff
-    ]
-)
-
-# --- parse-stage output envelope (P9 strict-parse error channel) --------
-# Reference raises ParseError and the task wrapper swallows+logs
-# (scrapers/errors.py:1-2, tasks.py:28-34). In the engine, bad rows go
-# to a quarantine sink instead of killing the stream.
-def with_error_channel(payload: StructType) -> StructType:
-    return StructType(
-        [
-            StructField("ok", BooleanType(), False),
-            StructField("error", StringType(), True),
-            StructField("row", payload, True),
-        ]
-    )
-
 
 # --- multimodal: opaque binary + typed metadata --------------------------
 MEDIA = StructType(
@@ -153,9 +41,4 @@ EMBEDDING = StructType(
         StructField("embedding", ArrayType(FloatType()), False),
         StructField("label", IntegerType(), True),
     ]
-)
-
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
 )

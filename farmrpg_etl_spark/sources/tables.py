@@ -24,8 +24,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from farmrpg_etl_spark.schemas import TESTDATA_TABLES
-
 
 def _nano_timestamp_cols(path: str) -> list[str]:
     import pyarrow as pa
@@ -69,13 +67,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,12 +1,13 @@
-"""r18 optimization profiling harness.
+"""Optimization-round profiling harness.
 
 Times registry queries exactly as bench.py does (noop sink, warm run
 then min-of-2 steady) and captures ``explain('formatted')`` for each
-into plans/r18/<name>_<tag>.txt.
+into plans/r<N>/<name>_<tag>.txt, where N is the ``--round`` number
+(which also names the Spark session).
 
 Usage:
-    SPARK_GRAFT_CPUS=32 python scripts/profile_r18.py --tag before q1_pricing_summary ...
-    python scripts/profile_r18.py --tag before --no-plan <names...>   # time only
+    SPARK_GRAFT_CPUS=32 python scripts/profile_round.py --round 19 --tag before q1_pricing_summary ...
+    python scripts/profile_round.py --round 19 --tag before --no-plan <names...>   # time only
 """
 
 from __future__ import annotations
@@ -16,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
 
@@ -24,6 +26,7 @@ os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--no-plan", action="store_true")
     ap.add_argument("--plan-only", action="store_true")
@@ -34,10 +37,10 @@ def main() -> None:
     from farmrpg_etl_spark.queries import QUERIES
     from farmrpg_etl_spark.session import get_spark
 
-    spark = get_spark("profile-r18")
+    spark = get_spark(f"profile-r{args.round}")
     spark.sparkContext.setLogLevel("ERROR")
 
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r18")
+    plans_dir = os.path.join(_REPO, "plans", f"r{args.round}")
     os.makedirs(plans_dir, exist_ok=True)
 
     def run(name: str) -> None:

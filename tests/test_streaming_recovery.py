@@ -16,6 +16,7 @@ from datetime import datetime, timedelta
 
 import pytest
 from pyspark.errors.exceptions.captured import StreamingQueryException
+from pyspark.sql import functions as F
 
 from farmrpg_etl_spark.plans.topology import (
     chat_pipeline_batch,
@@ -177,3 +178,45 @@ def test_clean_stop_and_resume_picks_up_only_new_files(spark, tmp_path):
     # resumed query continued the batch sequence instead of restarting it
     assert messages.last_batch_id("chat_insert") == 1
     assert messages.read().count() == 2
+
+
+# --- the frozen-globals twins' replay scaffold -----------------------------
+
+
+def _tiny_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"w{i % 3}") for i in range(12)], "doc_id long, word string"
+    )
+
+
+def _tiny_recipe(batch_df):
+    return batch_df.select("doc_id", F.upper("word").alias("word"))
+
+
+def test_replay_as_stream_sink_equals_batch_recipe(spark):
+    """Four triggers, one per ``doc_id % 4`` file, and the sink's end
+    state is the recipe applied to the whole input in one batch."""
+    from farmrpg_etl_spark.queries import _replay_as_stream
+
+    seen: list[tuple[int, int]] = []
+
+    def recipe(batch_df, batch_id):
+        seen.append((batch_id, batch_df.count()))
+        return _tiny_recipe(batch_df)
+
+    docs = _tiny_docs(spark)
+    out = _replay_as_stream(spark, docs, "doc_id", recipe, ["doc_id"])
+    assert seen == [(0, 3), (1, 3), (2, 3), (3, 3)]
+    assert sorted(out.collect()) == sorted(_tiny_recipe(docs).collect())
+
+
+def test_replay_as_stream_raises_instead_of_partial_sink(spark):
+    from farmrpg_etl_spark.queries import _replay_as_stream
+
+    def recipe(batch_df, batch_id):
+        if batch_id == 2:
+            raise RuntimeError("recipe failed on batch 2")
+        return _tiny_recipe(batch_df)
+
+    with pytest.raises(StreamingQueryException, match="recipe failed on batch 2"):
+        _replay_as_stream(spark, _tiny_docs(spark), "doc_id", recipe, ["doc_id"])
