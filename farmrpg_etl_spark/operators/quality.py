@@ -1694,7 +1694,8 @@ def logit_train_hashed(
     oracle replays the whole trajectory exactly.
 
     ``labels`` must carry one NON-NULL 0/1 ``label_col`` row per
-    document (documents with no feature rows still train the bias).
+    document (documents with no feature rows still train the bias); a
+    duplicate or NULL id fails the call.
     Returns ``(step, bucket, w)`` for step 0..rounds, with bucket -1
     carrying the bias.
 
@@ -1736,8 +1737,19 @@ def logit_train_hashed(
         F.col(id_col).alias("__id"),
         F.col(label_col).cast("long").alias("__y"),
     ).localCheckpoint()
+    # the label contract (one row per document) is checked INSIDE the
+    # eager row-count aggregate: duplicate label rows would silently
+    # square their document's bias-gradient contribution (every bias
+    # feature row meets every residual row in the __id join), and
+    # column pruning cannot drop a check that __n itself depends on
+    n = F.count(F.lit(1))
     nrow = lab.agg(
-        F.greatest(F.count(F.lit(1)), F.lit(1).cast("long")).alias("__n")
+        F.when(n == F.count_distinct("__id"), F.greatest(n, F.lit(1).cast("long")))
+        .otherwise(
+            F.raise_error(F.lit(f"logit_train_hashed: labels need one row per non-NULL {id_col}"))
+            .cast("long")
+        )
+        .alias("__n")
     ).localCheckpoint()
     # the synthetic bias feature: one bucket -1 / x=1.0 row per labeled
     # document (a union of two checkpointed leaves — no checkpoint of

@@ -310,3 +310,19 @@ def test_hashed_train_featureless_doc_trains_bias_exactly(spark):
         (1, -1, 2.0),
         (2, -1, 2.0),
     ]
+
+
+def test_hashed_train_rejects_duplicate_label_rows(spark):
+    # one label row per document is the trainer's contract: a second
+    # row for doc 1 would silently skew its bias gradient, so the eager
+    # row-count aggregate fails the call instead
+    from farmrpg_etl_spark.operators.quality import (
+        hashed_logit_features,
+        logit_train_hashed,
+    )
+
+    df = spark.createDataFrame([(1, "aa bb"), (2, "cc")], "doc_id long, text string")
+    lab = spark.createDataFrame([(1, 1), (1, 0), (2, 0)], "doc_id long, y int")
+    feats = hashed_logit_features(df, "text", "doc_id")
+    with pytest.raises(Exception, match="one row per non-NULL doc_id"):
+        logit_train_hashed(feats, lab, "doc_id", "y", rounds=1)
